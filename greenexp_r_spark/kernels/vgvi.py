@@ -156,6 +156,11 @@ def vgvi_batch(dsm_patches: np.ndarray, gs_patches: np.ndarray,
     gs_shift[:, in_patch] = gs_patches[:, shifted[in_patch]]
     gs_int = gs_shift.astype(np.int64)        # int accumulation quirk
 
+    # ring weights are per-ring independent, so the weights of the
+    # farthest ring any observer can reach, sliced per observer, are
+    # bit-equal to decay_weights(max_d) — one 200-step trapezoid per
+    # ring per batch instead of per observer
+    w_all = decay_weights(int(ring.max()), radius, fun, m, b)
     out = np.zeros(nobs)
     for o in range(nobs):
         vcells = np.nonzero(vis[o])[0]
@@ -170,6 +175,6 @@ def vgvi_batch(dsm_patches: np.ndarray, gs_patches: np.ndarray,
             out[o] = float(gsum[0] // total[0])   # C++ int division
             continue
         raw = gsum.astype(float) / total
-        w = decay_weights(max_d, radius, fun, m, b)
+        w = w_all[:max_d]
         out[o] = float((raw * (w / w.sum())).sum())
     return out

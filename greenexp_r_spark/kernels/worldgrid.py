@@ -74,35 +74,38 @@ def greenspace(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     return in_park(x, y).astype(float)
 
 
-def in_park_rows(px: np.ndarray, py: np.ndarray,
-                 ox: np.ndarray, oy: np.ndarray,
-                 reach: float) -> np.ndarray:
-    """Park mask for per-observer patch arrays px/py of shape
-    (n_obs, n_cells), pruned per park: a park is tested against a row
-    only if its disc can reach that observer's patch (center distance ≤
-    radius + reach).  Cuts the 60×full-array sweep of in_park() to the
-    handful of parks actually near each observer — the same
-    candidate-pruning idea as the J7 join, applied inside the kernel.
+def patch_fields(xc: np.ndarray, yr: np.ndarray, ox: np.ndarray,
+                 oy: np.ndarray, reach: float
+                 ) -> tuple[np.ndarray, np.ndarray]:
+    """(dsm, greenspace) of per-observer square patches, each
+    (n_obs, nr·nc) row-major, from the patch column x-coordinates
+    ``xc`` (n_obs, nc) and row y-coordinates ``yr`` (n_obs, nr).
+
+    Separable: terrain is sin(x)·sin(y), the building hash is linear
+    in the block indices and a park test is dx² + dy², so every
+    per-axis factor is evaluated on the row and column vectors and
+    combined by one broadcast, in the operation order of dtm(),
+    building_height() and in_park() — the same bits as those applied
+    to the full coordinate grids, at O(n·nc) transcendental work.
+    Parks are pruned per observer: a park is tested against a patch
+    only if its disc can reach the observer (center distance ≤ radius
+    + reach), the candidate pruning of the J7 join inside the kernel.
     """
-    discs = park_discs()
-    out = np.zeros(px.shape, dtype=bool)
-    for cx, cy, r in discs:
+    n, nr, nc = len(xc), yr.shape[1], xc.shape[1]
+    base = 10.0 + (5.0 * np.sin(xc / 2000.0))[:, None, :] \
+        * np.sin(yr / 2000.0)[:, :, None]
+    # building hash (bx·M1 + by·M2) mod P, reduced per axis: < 2P < 2³²
+    hx = (np.floor(xc / BLOCK).astype(np.int64) * BH_MUL1) % BH_MOD
+    hy = (np.floor(yr / BLOCK).astype(np.int64) * BH_MUL2) % BH_MOD
+    h = hy.astype(np.uint32)[:, :, None] + hx.astype(np.uint32)[:, None, :]
+    np.subtract(h, np.uint32(BH_MOD), out=h, where=h >= np.uint32(BH_MOD))
+    b = np.where(h % np.uint32(7) < 2, 6.0 + (h % np.uint32(25)), 0.0)
+    park = np.zeros((n, nr, nc), dtype=bool)
+    for cx, cy, r in park_discs():
         rows = np.nonzero((ox - cx) ** 2 + (oy - cy) ** 2
                           <= (r + reach) ** 2)[0]
-        if not len(rows):
-            continue
-        sub_x = px[rows]
-        sub_y = py[rows]
-        out[rows] |= (sub_x - cx) ** 2 + (sub_y - cy) ** 2 <= r * r
-    return out
-
-
-def patch_fields(px: np.ndarray, py: np.ndarray,
-                 ox: np.ndarray, oy: np.ndarray,
-                 reach: float) -> tuple[np.ndarray, np.ndarray]:
-    """(dsm, greenspace) for per-observer patches, computing the park
-    mask once with per-observer pruning."""
-    base = dtm(px, py)
-    b = building_height(px, py)
-    park = in_park_rows(px, py, ox, oy, reach)
-    return np.where(park, base, base + b), park.astype(float)
+        if len(rows):
+            park[rows] |= ((xc[rows] - cx) ** 2)[:, None, :] \
+                + ((yr[rows] - cy) ** 2)[:, :, None] <= r * r
+    dsm = np.where(park, base, base + b)
+    return dsm.reshape(n, -1), park.reshape(n, -1).astype(float)

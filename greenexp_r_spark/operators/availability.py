@@ -3,26 +3,32 @@
 Re-expresses GreenExp_R's `calc_ndvi` (ndvi_calc.R:332-344),
 `land_cover` (land_cover.R:368-399), `greenspace_pct`
 (park_coverage.R:337-358) and `canopy_pct` (canopy_coverage.R:334-345)
-as Spark plans:
+as Spark plans.
 
-    points → enumerate covered raster cells (explode(sequence)) →
-    disc-membership filter → integer-exact aggregate per point.
+Zonal statistics (`ndvi_zonal`, `landcover_fractions`) are one
+point-local mapInPandas over (point_id, x, y):
+
+    Arrow batch → sort by y, cut the raster into disjoint row strips
+    (and each strip by x gaps into windows) → render each window in
+    numpy (sources/tiles.ndvi_window / landcover_window) → integer
+    disc moments per point by row intervals (kernels/zonal.
+    disc_partials) → final mean/sd/fraction expressions in Spark.
 
 The raster is "virtual": cell values are a closed-form function of the
-cell index (world.ndvi_int_expr), so the zonal extract (J1) costs one
-narrow explode instead of a tile shuffle.  The tile-table join variant
-(real raster arrays) lives in `operators/zonal_tiles.py` — same
-outputs, exercised by pytest; this module is the Catalyst-native path.
+cell index (world.ndvi_int_expr), so each task renders the windows its
+points need — no cell explode, no disc filter, no point_id shuffle.
+Per point the work is O(rows of the disc), not O(cells of the disc);
+a window costs its cells once however many points share it.  The
+tile-table join variant (real raster arrays, same kernel) lives in
+`operators/zonal_tiles.py`.
 
 Scale notes (100 TB posture):
-  * the explode fans each point to ~(2R/res)² cells *map-side* — no
-    shuffle until the per-point aggregate, which Spark executes as
-    partial (map-side) + final hash aggregation; shuffle volume is
-    O(points), not O(points × cells).
+  * memory per task is bounded by ZONAL_WINDOW_CELLS whatever the
+    partition size, extent or buffer: oversized windows are rendered
+    in strips whose partial moments add up exactly;
   * overlay joins use the J7 shape (SURVEY.md §2.3): coarse bucket
     equi-join (hash join, broadcastable small side) → exact distance
     refine.  Never a nested-loop theta join.
-  * everything is whole-stage-codegen JVM arithmetic; zero Python.
   * integer sums (world.ndvi_int_expr) make results bit-identical
     across engines and partition orders — also the right call at scale,
     where float sums are nondeterministic under retries/AQE re-splits.
@@ -30,16 +36,30 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
+
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .. import constants as C
-from .. import world
+from ..kernels.zonal import disc_partials
+from ..sources.tiles import landcover_window, ndvi_window
+
+# cells of one rendered window strip: bounds a task's zonal working
+# set (a few arrays of this many cells) independently of partition
+# size, world extent and buffer — the KERNEL_BATCH idea of
+# operators/visibility.py applied to raster windows
+ZONAL_WINDOW_CELLS = 4_000_000
 
 
 def covered_cells(points: DataFrame, buffer_m: float, res: int) -> DataFrame:
     """Explode each point into the raster cells whose *center* lies in
     its disc buffer — the discrete zonal-extract semantics of
-    terra::extract (ndvi_calc.R:332)."""
+    terra::extract (ndvi_calc.R:332).  The zonal statistics below use
+    the same membership predicate without the explode."""
     x, y = F.col("x"), F.col("y")
     lo = lambda c: F.floor((c - buffer_m) / res).cast("long")
     hi = lambda c: F.floor((c + buffer_m) / res).cast("long")
@@ -54,28 +74,107 @@ def covered_cells(points: DataFrame, buffer_m: float, res: int) -> DataFrame:
         (ccx - x) * (ccx - x) + (ccy - y) * (ccy - y) <= float(buffer_m) ** 2)
 
 
-def ndvi_zonal(points: DataFrame, buffer_m: float = C.BUFFER_M,
-               add_sd: bool = True) -> DataFrame:
-    """Mean (and sample-sd) NDVI in each point's disc buffer.
+def _windows(xs: np.ndarray, ys: np.ndarray, buffer_m: float, res: int):
+    """Raster windows that together cover every point's disc, as
+    (point index array, ci0, cj0, ncol, nrow).
 
-    Parity target: ndvi_calc.R:332-344 (NA→0 at :336, mean at :339,
-    sample sd at :341-344).  Output: (point_id, mean_ndvi[, sd_ndvi],
-    n_cells).
-    """
-    cells = covered_cells(points.select("point_id", "x", "y"),
-                          buffer_m, C.NDVI_RES)
-    v = F.expr(world.ndvi_int_expr("ci", "cj"))
-    agg = cells.groupBy("point_id").agg(
-        F.sum(v).alias("s1"),
-        F.sum(v * v).alias("s2"),
-        F.count(F.lit(1)).alias("n_cells"),
-    )
+    Windows are cut from disjoint strips of raster rows, so a cell row
+    is rendered once per strip however many discs reach it; a disc
+    crossing strips gets its partial sums from each.  Within a strip
+    the points whose disc reaches it are sorted by x and split where
+    their column ranges leave a gap, so sparse points get windows
+    around their own discs, dense points one window per strip.  A
+    window is capped at ZONAL_WINDOW_CELLS by splitting its columns.
+    Column/row ranges pad covered_cells' floor((c ∓ R)/res) bounds by
+    one cell."""
+    if not len(xs):
+        return
+    ci_lo = np.floor((xs - buffer_m) / res).astype(np.int64) - 1
+    ci_hi = np.floor((xs + buffer_m) / res).astype(np.int64) + 1
+    cj_lo = np.floor((ys - buffer_m) / res).astype(np.int64) - 1
+    cj_hi = np.floor((ys + buffer_m) / res).astype(np.int64) + 1
+    order = np.argsort(ys, kind="stable")     # cj_lo/cj_hi ascend too
+    lo_s, hi_s = cj_lo[order], cj_hi[order]
+    h = min(max(int(4 * buffer_m / res), 32), ZONAL_WINDOW_CELLS)
+    s0 = int(lo_s[0])
+    while True:
+        a = int(np.searchsorted(hi_s, s0, side="left"))
+        if a == len(order):
+            return
+        s0 = max(s0, int(lo_s[a]))          # skip rows no disc reaches
+        b = int(np.searchsorted(lo_s, s0 + h, side="left"))
+        strip = order[a:b]
+        strip = strip[np.argsort(xs[strip], kind="stable")]
+        lo_x, hi_x = ci_lo[strip], ci_hi[strip]
+        for g in np.split(strip,
+                          np.flatnonzero(lo_x[1:] > hi_x[:-1] + 1) + 1):
+            r0 = max(s0, int(cj_lo[g].min()))
+            nrow = min(s0 + h - 1, int(cj_hi[g].max())) - r0 + 1
+            c0, c1 = int(ci_lo[g].min()), int(ci_hi[g].max())
+            wcol = max(1, ZONAL_WINDOW_CELLS // nrow)
+            for ci0 in range(c0, c1 + 1, wcol):
+                yield g, ci0, r0, min(wcol, c1 + 1 - ci0), nrow
+        s0 += h
+
+
+def zonal_sums(xs: np.ndarray, ys: np.ndarray, buffer_m: float,
+               res: int, cells, n_arrays: int):
+    """Numpy core of the zonal statistics: per point, the integer sums
+    of the ``n_arrays`` cell arrays ``cells(ci0, cj0, ncol, nrow)``
+    renders over the cells covered_cells would emit, and their count.
+    Returns ((n_arrays, P) sums, (P,) counts)."""
+    r2 = float(buffer_m) ** 2
+    sums = np.zeros((n_arrays, len(xs)), dtype=np.int64)
+    n = np.zeros(len(xs), dtype=np.int64)
+    for g, ci0, cj0, ncol, nrow in _windows(xs, ys, buffer_m, res):
+        part, pn = disc_partials(
+            cells(ci0, cj0, ncol, nrow),
+            (np.arange(ci0, ci0 + ncol) + 0.5) * res,
+            (np.arange(cj0, cj0 + nrow) + 0.5) * res, xs[g], ys[g], r2)
+        sums[:, g] += part
+        n[g] += pn
+    return sums, n
+
+
+def _zonal_map(points: DataFrame, buffer_m: float, res: int, cells,
+               names: list[str]) -> DataFrame:
+    """(point_id, *names, n_cells) per point with at least one covered
+    cell: zonal_sums in one point-local mapInPandas (no explode, no
+    shuffle).  point_id keys the points table, so each point is one
+    output row, as the explode plan's groupBy(point_id) gave."""
+    pts = points.select("point_id", "x", "y")
+    schema = StructType(
+        [pts.schema["point_id"]]
+        + [StructField(c, LongType()) for c in names]
+        + [StructField("n_cells", LongType(), False)])
+
+    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            # null coordinates enumerate no cells (sequence(null, null))
+            pdf = pdf[pdf["x"].notna() & pdf["y"].notna()]
+            if not len(pdf):
+                continue
+            sums, n = zonal_sums(pdf["x"].to_numpy(dtype=np.float64),
+                                 pdf["y"].to_numpy(dtype=np.float64),
+                                 buffer_m, res, cells, len(names))
+            keep = n > 0
+            out = {"point_id": pdf["point_id"].to_numpy()[keep]}
+            for name, s in zip(names, sums):
+                out[name] = s[keep]
+            out["n_cells"] = n[keep]
+            yield pd.DataFrame(out)
+
+    return pts.mapInPandas(run, schema)
+
+
+def ndvi_stats(agg: DataFrame, add_sd: bool) -> DataFrame:
+    """(point_id, mean_ndvi[, sd_ndvi], n_cells) from integer moments
+    (s1, s2, n_cells) — sample sd (R `sd`, n-1) in a fixed expression
+    tree so both engines emit the same bits."""
     n = F.col("n_cells")
     mean = F.col("s1").cast("double") / (F.lit(800.0) * n)
     out = [F.col("point_id"), mean.alias("mean_ndvi")]
     if add_sd:
-        # sample sd (R `sd`, n-1) from exact integer moments, in a fixed
-        # expression tree so both engines emit the same bits.
         s1d = F.col("s1").cast("double")
         s2d = F.col("s2").cast("double")
         nd = n.cast("double")
@@ -85,23 +184,41 @@ def ndvi_zonal(points: DataFrame, buffer_m: float = C.BUFFER_M,
     return agg.select(*out)
 
 
+def ndvi_zonal(points: DataFrame, buffer_m: float = C.BUFFER_M,
+               add_sd: bool = True) -> DataFrame:
+    """Mean (and sample-sd) NDVI in each point's disc buffer.
+
+    Parity target: ndvi_calc.R:332-344 (NA→0 at :336, mean at :339,
+    sample sd at :341-344).  Output: (point_id, mean_ndvi[, sd_ndvi],
+    n_cells).
+    """
+    def cells(ci0, cj0, ncol, nrow):
+        v = ndvi_window(ci0, cj0, ncol, nrow, na=0)
+        yield v
+        if add_sd:
+            yield v * v            # |v| ≤ 800: v² fits int32
+
+    names = ["s1", "s2"] if add_sd else ["s1"]
+    agg = _zonal_map(points, buffer_m, C.NDVI_RES, cells, names)
+    return ndvi_stats(agg, add_sd)
+
+
 def landcover_fractions(points: DataFrame,
                         buffer_m: float = C.BUFFER_M) -> DataFrame:
     """Per-point land-cover class fractions (land_cover.R:368-399).
 
     The reference pivots cell counts wide then divides by the row sum
-    (land_cover.R:373-377); here it's one hash aggregate of conditional
-    integer counts — single shuffle, no pivot pass.  Also emits the
+    (land_cover.R:373-377); here each class count is a disc sum of
+    the class indicator — no pivot pass, no shuffle.  Also emits the
     greencover composite (green_cover_streets.R:244-246).
     """
-    cells = covered_cells(points.select("point_id", "x", "y"),
-                          buffer_m, C.LC_RES)
-    cells = cells.withColumn("code", F.expr(world.landcover_expr("ci", "cj")))
-    aggs = [F.count(F.lit(1)).alias("n_cells")]
-    for c in C.LC_CODES:
-        aggs.append(F.sum(F.when(F.col("code") == c, 1).otherwise(0))
-                    .alias(f"cnt_{c}"))
-    g = cells.groupBy("point_id").agg(*aggs)
+    def cells(ci0, cj0, ncol, nrow):
+        code = landcover_window(ci0, cj0, ncol, nrow)
+        for c in C.LC_CODES:
+            yield code == c
+
+    g = _zonal_map(points, buffer_m, C.LC_RES, cells,
+                   [f"cnt_{c}" for c in C.LC_CODES])
     n = F.col("n_cells").cast("double")
     cols = [F.col("point_id")]
     # 12-column parity with land_cover.R:393-399: every WorldCover

@@ -556,8 +556,8 @@ def synthesize_audio(text: str):
     """Deterministic mono PCM from a document's text (the audio
     analog of synthesize_image): n and rate from the text length,
     sample i (1-based) = (code(text[(i-1) % len]) * MUL + i) % MOD
-    - MOD/2 — integer arithmetic a SQL oracle replays exactly via
-    ascii(substr(...))."""
+    - MOD/2, code = the character's codepoint — integer arithmetic a
+    SQL oracle replays exactly via ascii(substr(...))."""
     import numpy as np
 
     lt = len(text)
@@ -565,9 +565,11 @@ def synthesize_audio(text: str):
     rate = 8000 + (lt % 3) * 4000
     # empty text → a single zero code (the SQL twin gets this free:
     # ascii(substr(text, ..., 1)) over '' is 0 and the index wraps on
-    # GREATEST(lt, 1)); without the guard lt=0 crashes the modulo
-    codes = (np.frombuffer(text.encode("ascii"),
-                           dtype=np.uint8).astype(np.int64)
+    # GREATEST(lt, 1)); without the guard lt=0 crashes the modulo.
+    # Codes are codepoints, as ascii() returns for non-ASCII
+    # characters (len() and length() count characters, not bytes).
+    codes = (np.frombuffer(text.encode("utf-32-le"),
+                           dtype="<u4").astype(np.int64)
              if lt else np.zeros(1, dtype=np.int64))
     i = np.arange(1, n + 1, dtype=np.int64)
     s = ((codes[(i - 1) % max(lt, 1)] * AUDIO_SAMPLE_MUL + i)

@@ -35,9 +35,10 @@ WIDEN_MIN_BYTES = 4 << 20
 def widen(df: DataFrame,
           bytes_per_task: int | None = 512 * 1024) -> DataFrame:
     """Ensure enough scan partitions; no-op when the input already
-    has them, or when the source files are small enough
+    has them, when the source files are small enough
     (< WIDEN_MIN_BYTES) that the repartition exchange costs more than
-    the parallelism is worth.  The size check is a driver-side file
+    the parallelism is worth, or when their size cannot be read
+    locally (remote schemes).  The size check is a driver-side file
     listing — no Spark job.
 
     Target: source_bytes // bytes_per_task, capped at
@@ -59,10 +60,12 @@ def widen(df: DataFrame,
     if files:
         try:
             tot = sum(os.path.getsize(urlparse(f).path) for f in files)
-            if tot < WIDEN_MIN_BYTES:
-                return df
         except OSError:
-            pass
+            # not a local path (s3://, hdfs://, ...): the size is
+            # unknown, and such sources arrive with splits of their own
+            return df
+        if tot < WIDEN_MIN_BYTES:
+            return df
     target = sc.defaultParallelism
     if bytes_per_task and tot:
         target = max(2, min(target, int(tot) // int(bytes_per_task)))

@@ -48,19 +48,45 @@ def n_tiles(res: int = C.NDVI_RES) -> int:
     return math.ceil(C.WORLD_SIZE / (TILE_CELLS * res))
 
 
+def cell_hash(ci0: int, cj0: int, ncol: int, nrow: int,
+              a: int, b: int) -> np.ndarray:
+    """(nrow, ncol) uint32 window of world.cell_hash_expr over cells
+    ci0..ci0+ncol-1 × cj0..cj0+nrow-1 — row r is cj0+r (south first).
+    The hash is linear, so it is reduced per axis and combined by one
+    broadcast add (< 2·P31, no wrap); the integers are those of the
+    SQL expression, in half the bytes of int64."""
+    hx = (np.arange(ci0, ci0 + ncol, dtype=np.int64) * a) % C.P31
+    hy = (np.arange(cj0, cj0 + nrow, dtype=np.int64) * b) % C.P31
+    h = hy.astype(np.uint32)[:, None] + hx.astype(np.uint32)[None, :]
+    np.subtract(h, np.uint32(C.P31), out=h, where=h >= np.uint32(C.P31))
+    return h
+
+
+def ndvi_window(ci0: int, cj0: int, ncol: int, nrow: int,
+                na: int = NA_SENTINEL) -> np.ndarray:
+    """Integer NDVI*800 values (world.ndvi_int_expr) of a (nrow, ncol)
+    cell window as int32, NA cells as ``na`` — the one numpy rendering
+    of the virtual NDVI raster."""
+    h = cell_hash(ci0, cj0, ncol, nrow, C.NDVI_H_A, C.NDVI_H_B)
+    v = (h % np.uint32(C.NDVI_MOD)).astype(np.int32) - 200
+    v[h % np.uint32(C.NDVI_NA_MOD) == 0] = na
+    return v
+
+
+def landcover_window(ci0: int, cj0: int, ncol: int,
+                     nrow: int) -> np.ndarray:
+    """WorldCover class codes (world.landcover_expr) of a (nrow, ncol)
+    cell window."""
+    h = cell_hash(ci0, cj0, ncol, nrow, C.LC_H_A, C.LC_H_B)
+    return np.asarray(C.LC_CODES, dtype=np.int32)[h % len(C.LC_CODES)]
+
+
 def ndvi_tile_values(tx: int, ty: int, res: int = C.NDVI_RES) -> np.ndarray:
     """Integer NDVI*800 values of tile (tx, ty), row-major with
-    cell = row*ncol + col, row 0 at ymin (south) — identical integer
-    arithmetic to world.ndvi_int_expr; NA cells → NA_SENTINEL."""
-    ci0 = tx * TILE_CELLS
-    cj0 = ty * TILE_CELLS
-    ci = ci0 + np.arange(TILE_CELLS, dtype=np.int64)[None, :]
-    cj = cj0 + np.arange(TILE_CELLS, dtype=np.int64)[:, None]
-    h = (ci * C.NDVI_H_A + cj * C.NDVI_H_B) % C.P31
-    h = (h + C.P31) % C.P31
-    v = (h % C.NDVI_MOD) - 200
-    v = np.where(h % C.NDVI_NA_MOD == 0, NA_SENTINEL, v)
-    return v.reshape(-1).astype(np.int32)
+    cell = row*ncol + col, row 0 at ymin (south); NA cells →
+    NA_SENTINEL."""
+    return ndvi_window(tx * TILE_CELLS, ty * TILE_CELLS, TILE_CELLS,
+                       TILE_CELLS).reshape(-1)
 
 
 S2_SCHEMA = StructType([
@@ -82,10 +108,9 @@ def band_tile_values(tx: int, ty: int) -> tuple[np.ndarray, np.ndarray]:
     closed-form spatial hash, same cell addressing as the NDVI tiles.
     The actual Sentinel-2 workflow computes ndvi=(nir−red)/(red+nir)
     from two such bands (ndvi_calc.R:315-318)."""
-    ci = tx * TILE_CELLS + np.arange(TILE_CELLS, dtype=np.int64)[None, :]
-    cj = ty * TILE_CELLS + np.arange(TILE_CELLS, dtype=np.int64)[:, None]
-    hr = ((ci * C.RED_H_A + cj * C.RED_H_B) % C.P31 + C.P31) % C.P31
-    hn = ((ci * C.NIR_H_A + cj * C.NIR_H_B) % C.P31 + C.P31) % C.P31
+    ci0, cj0 = tx * TILE_CELLS, ty * TILE_CELLS
+    hr = cell_hash(ci0, cj0, TILE_CELLS, TILE_CELLS, C.RED_H_A, C.RED_H_B)
+    hn = cell_hash(ci0, cj0, TILE_CELLS, TILE_CELLS, C.NIR_H_A, C.NIR_H_B)
     red = (1 + hr % C.RED_MOD).reshape(-1).astype(np.int32)
     nir = (1 + hn % C.NIR_MOD).reshape(-1).astype(np.int32)
     return red, nir
@@ -173,10 +198,9 @@ def scene_tile_values(scene: int, tx: int, ty: int,
     reduce the GEE workflow runs server-side (SURVEY S4)."""
     base = ndvi_tile_values(tx, ty, res).astype(np.int64)
     off = (scene * SCENE_OFF_MUL) % 21 - 10
-    ci = tx * TILE_CELLS + np.arange(TILE_CELLS, dtype=np.int64)[None, :]
-    cj = ty * TILE_CELLS + np.arange(TILE_CELLS, dtype=np.int64)[:, None]
-    h = ((ci * C.NDVI_H_A + cj * C.NDVI_H_B
-          + scene * SCENE_CLOUD_A) % C.P31 + C.P31) % C.P31
+    h = cell_hash(tx * TILE_CELLS, ty * TILE_CELLS, TILE_CELLS,
+                  TILE_CELLS, C.NDVI_H_A, C.NDVI_H_B)
+    h = (h.astype(np.int64) + scene * SCENE_CLOUD_A) % C.P31
     cloudy = (h % SCENE_CLOUD_MOD == 0).reshape(-1)
     v = np.where(base == NA_SENTINEL, NA_SENTINEL, base + off)
     v = np.where(cloudy, NA_SENTINEL, v)

@@ -147,3 +147,25 @@ def test_audio_empty_text_is_defined():
     assert len(s) == 256 and rate == 8000
     d = M.decode_wav(M.encode_wav(s, rate))
     assert (d["samples"] == s).all()
+
+
+def test_audio_non_ascii_text_uses_codepoints():
+    """Non-ASCII text synthesizes from codepoints — what ascii() of a
+    one-character substr returns in the SQL twin — and round-trips."""
+    import duckdb
+    import numpy as np
+    from greenexp_r_spark.operators import multimodal as M
+
+    text = "grün 公园 🌳 é"
+    s, rate = M.synthesize_audio(text)
+    lt = len(text)
+    assert len(s) == 256 + (lt * 3) % 1024
+    assert rate == 8000 + (lt % 3) * 4000
+    mul, mod = M.AUDIO_SAMPLE_MUL, M.AUDIO_SAMPLE_MOD
+    want = duckdb.sql(
+        f"SELECT (ascii(substr('{text}', CAST((i - 1) % {lt} AS INT) + 1,"
+        f" 1)) * {mul} + i) % {mod} - {mod // 2} AS s "
+        f"FROM range(1, {len(s) + 1}) t(i) ORDER BY i").df()["s"]
+    np.testing.assert_array_equal(s.astype(np.int64), want.to_numpy())
+    d = M.decode_wav(M.encode_wav(s, rate))
+    assert (d["samples"] == s).all()

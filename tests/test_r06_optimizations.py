@@ -150,3 +150,25 @@ def test_widen_noop_below_size_gate(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # gate fixtures are far below WIDEN_MIN_BYTES -> identical plan
     assert widen(df) is df
+
+
+def test_widen_noop_on_remote_paths():
+    """A remote input (s3://, no local size) is left as it is — not
+    repartitioned to a flat defaultParallelism target."""
+    from types import SimpleNamespace
+
+    from greenexp_r_spark.plans.widen import widen
+
+    class RemoteScan:
+        sparkSession = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=32))
+        rdd = SimpleNamespace(getNumPartitions=lambda: 1)
+
+        def inputFiles(self):
+            return ["s3://bucket/warehouse/documents.parquet"]
+
+        def repartition(self, n):
+            raise AssertionError(f"remote scan repartitioned to {n}")
+
+    df = RemoteScan()
+    assert widen(df) is df

@@ -123,3 +123,45 @@ def test_viewshed_hint_does_not_change_results(spark):
     b = V.viewshed_metrics(pts, sample_mod=1, n_obs_hint=40).toPandas() \
         .sort_values("point_id").reset_index(drop=True)
     assert a.equals(b)
+
+
+def test_patches_equal_per_cell_fields():
+    """The separable patch synthesis equals worldgrid.dsm/greenspace
+    evaluated cell by cell, for observers straddling 20 m building
+    block boundaries, at x<0 / y<0, and inside parks."""
+    from greenexp_r_spark.kernels import worldgrid as W
+
+    rng = np.random.default_rng(4)
+    parks = W.park_discs()[:12]
+    xs = np.concatenate([np.arange(-4, 4) * 20.0, [-0.1, -19.99, 40.0001],
+                         rng.uniform(-250, 20250, 30),
+                         parks[:, 0] + rng.uniform(-30, 30, 12)])
+    ys = np.concatenate([np.arange(-4, 4) * 20.0 + 0.01, [-0.1, 0.0, -40.0],
+                         rng.uniform(-250, 20250, 30),
+                         parks[:, 1] + rng.uniform(-30, 30, 12)])
+    r, res = int(round(C.VIS_MAX_DIST / C.VIS_RES)), C.VIS_RES
+    dsm, gs, h0 = visibility._patches(xs, ys, r, res)
+    nc = 2 * r + 1
+    ccx = (np.floor(xs / res) + 0.5) * res
+    ccy = (np.floor(ys / res) + 0.5) * res
+    offs = (np.arange(nc) - r) * res
+    px = np.broadcast_to(ccx[:, None, None] + offs[None, None, :],
+                         (len(xs), nc, nc)).reshape(len(xs), -1)
+    py = np.broadcast_to(ccy[:, None, None] - offs[None, :, None],
+                         (len(xs), nc, nc)).reshape(len(xs), -1)
+    assert gs.any()
+    np.testing.assert_array_equal(dsm, W.dsm(px, py))
+    np.testing.assert_array_equal(gs, W.greenspace(px, py))
+    np.testing.assert_array_equal(h0, W.dtm(ccx, ccy) + C.OBSERVER_HEIGHT)
+
+
+@pytest.mark.parametrize("fun", [1, 2])
+def test_decay_weights_slice_is_bit_equal(fun):
+    """vgvi_batch computes the ring weights once per batch and slices
+    them per observer: every prefix must equal the direct call."""
+    radius = C.VIS_MAX_DIST
+    full = K.decay_weights(60, radius, fun, C.VGVI_M, C.VGVI_B)
+    for max_d in range(1, 61):
+        np.testing.assert_array_equal(
+            full[:max_d],
+            K.decay_weights(max_d, radius, fun, C.VGVI_M, C.VGVI_B))

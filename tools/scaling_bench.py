@@ -9,8 +9,8 @@ table large enough to be compute-bound (the sf0.1 suite is too small
 to measure parallel efficiency — Spark fixed overhead dominates):
     pages (url, warc_ts, html, text, lang; ~1.31 captures/url) →
     latest-snapshot dedup → byte-exact extract from html → url
-    geocode → buffer-zonal NDVI (explode ~2.8k cells/point, integer
-    hash aggregate) + nearest-park join + VGVI sample → count.
+    geocode → buffer-zonal NDVI (point-local row-interval kernel over
+    rendered raster windows) + nearest-park join + VGVI sample → count.
 
 Usage: python tools/scaling_bench.py [n_points] → JSON on stdout and
 appends the evidence table to BENCH/BASELINE.md.
